@@ -25,26 +25,44 @@ import graft.streaming.{ContinuousRollup, DeviceEvent, NotifyPipeline, Streaming
   *
   * Modes:
   *  - `setup`:  start a session and stop (a set-up time sample).
-  *  - `batch`:  a cold pass over `--slots`, then warm passes until
-  *              `--seconds` have gone by; every call is construct +
+  *  - `batch`:  a cold pass over `--slots`, then warm passes (see
+  *              [[Harness.warmPasses]]); every call is construct +
   *              plan + count of the plan the count actually runs.
   *  - `stream`: the gateway wiring (graft-replay → dedupEvents →
   *              NotifyPipeline beside ContinuousRollup) replayed over
   *              a derived events copy with seeded duplicate retries,
-  *              cold once, then warm replays until `--seconds`.
+  *              cold once, then warm replays ([[Harness.warmPasses]]).
   *  - `record`: one call per slot, writing the expected row counts and
   *              digests (and parquet dumps for the DuckDB cross-check).
   *
   * `--trace 1` adds the per-layer instruments: a listener keyed by job
   * group, kernel rows/s through `noop` writes, and `Tables` probes.
   * All correctness checks, listener reads, GCs and probes run outside
-  * the timed spans. */
+  * the timed spans.
+  *
+  * `--root` is the program's own temp root (index, Spark scratch,
+  * checkpoints, sinks); `--own` holds the harness's files (the derived
+  * stream input, the `Tables` probe copy, record dumps), so that what
+  * the program leaves under `--root` can be measured alone. */
 object Harness {
   type Obj = mutable.LinkedHashMap[String, Any]
   def obj(kv: (String, Any)*): Obj = mutable.LinkedHashMap(kv: _*)
   def now(): Long = System.nanoTime()
   def secs(a: Long, b: Long): Double = (b - a) / 1e9
   private val MB = 1024.0 * 1024.0
+
+  /** The first warm pass still carries JIT warm-up (4.9 s against 3.9 s
+    * for the second batch pass, on 4 cores); with at least three passes
+    * their median is a steady-state pass whatever the machine's speed. */
+  val MinWarmPasses = 3
+
+  /** Warm passes 1, 2, ...: at least [[MinWarmPasses]], then more while
+    * `seconds` have not gone by since the first began. */
+  def warmPasses(seconds: Double)(pass: Int => Unit): Unit = {
+    val t0 = now()
+    var p = 1
+    while (p <= MinWarmPasses || secs(t0, now()) < seconds) { pass(p); p += 1 }
+  }
 
   def main(args: Array[String]): Unit = {
     val opt = args.grouped(2).collect {
@@ -92,7 +110,7 @@ object Harness {
 
     if (trace) {
       BenchBus.drain(spark.sparkContext)
-      out("tables") = tablesProbe(spark, root, opt("data"))
+      out("tables") = tablesProbe(spark, opt("own"), opt("data"))
       out("kernels") = Kernels.measure(spark, opt("data"))
     }
     // end-of-run state, read after all timing is done
@@ -110,8 +128,8 @@ object Harness {
 
   /** `Tables` costs on a fresh copy of the events file, so no slot has
     * warmed its count or schema caches yet. */
-  def tablesProbe(spark: SparkSession, root: String, data: String): Obj = {
-    val path = Paths.get(root, "probe", "events.parquet")
+  def tablesProbe(spark: SparkSession, own: String, data: String): Obj = {
+    val path = Paths.get(own, "probe", "events.parquet")
     Files.createDirectories(path.getParent)
     Files.copy(Paths.get(data, "events.parquet"), path)
     val p = path.toString
@@ -148,7 +166,6 @@ object Harness {
     * cross-check, and the oracle SQL itself. */
   def record(spark: SparkSession, opt: Map[String, String], out: Obj): Boolean = {
     val data = opt("data")
-    val root = opt("root")
     val slots = Slots.parse(opt("slots"))
     val exp = obj()
     val sql = obj()
@@ -159,7 +176,7 @@ object Harness {
         case Some(q) =>
           exp(name) = obj("rows" -> rows, "digest" -> digest(df))
           sql(name) = q
-          df.write.mode("overwrite").parquet(s"$root/dump/$name")
+          df.write.mode("overwrite").parquet(s"${opt("own")}/dump/$name")
         case None => exp(name) = obj("rows" -> rows)
       }
     }
@@ -333,11 +350,7 @@ final class Batch(spark: SparkSession, opt: Map[String, String],
   def run(): Boolean = {
     val seconds = opt("seconds").toDouble
     pass(0)
-    val warm0 = now()
-    var p = 1
-    while (p <= Batch.MinWarmPasses || secs(warm0, now()) < seconds) {
-      pass(p); p += 1
-    }
+    warmPasses(seconds)(pass)
     if (trace) {
       BenchBus.drain(spark.sparkContext)
       calls.foreach { c =>
@@ -350,13 +363,6 @@ final class Batch(spark: SparkSession, opt: Map[String, String],
     out("checks") = checks.toSeq
     calls.forall(_("ok") == true) && checks.forall(_("ok") == true)
   }
-}
-
-object Batch {
-  /** The first warm pass still carries JIT warm-up (4.9 s against 3.9 s
-    * for the second, on 4 cores); with at least three passes their
-    * median is a steady-state pass whatever the machine's speed. */
-  val MinWarmPasses = 3
 }
 
 /** The gateway stream: graft-replay → dedupEvents → NotifyPipeline
@@ -386,7 +392,7 @@ final class Stream(spark: SparkSession, opt: Map[String, String],
     val k = math.max(1L, math.round(n * opt("dup_share").toDouble))
     val dups = base.orderBy(xxhash64(col("event_id"), lit(seed)), col("event_id"))
       .limit(k.toInt)
-    val path = s"$root/derived/events.parquet"
+    val path = s"${opt("own")}/derived/events.parquet"
     base.unionByName(dups).coalesce(1).write.mode("overwrite").parquet(path)
     (path, n + k, k)
   }
@@ -434,6 +440,11 @@ final class Stream(spark: SparkSession, opt: Map[String, String],
         .map(progressRec)
     }
     rec("queries") = mutable.LinkedHashMap(progress: _*)
+    // the source's offset planning over every trigger, idle ones too:
+    // the first trigger of each query stages the replay log
+    rec("latest_offset_ms") = qs.map(_._2.recentProgress.toSeq
+      .map(p => Option(p.durationMs.get("latestOffset")).map(_.longValue).getOrElse(0L))
+      .sum).sum
     val checks = mutable.ArrayBuffer.empty[Obj]
     failure.foreach(f => checks += obj("kind" -> "query", "ok" -> false, "detail" -> f))
     progress.foreach { case (n, ps) =>
@@ -468,11 +479,7 @@ final class Stream(spark: SparkSession, opt: Map[String, String],
     val (input, rows, dupCount) = derive()
     val seconds = opt("seconds").toDouble
     val passes = mutable.ArrayBuffer(replay(0, input, rows, dupCount))
-    val warm0 = now()
-    var p = 1
-    while (p == 1 || secs(warm0, now()) < seconds) {
-      passes += replay(p, input, rows, dupCount); p += 1
-    }
+    warmPasses(seconds)(p => passes += replay(p, input, rows, dupCount))
     out("replays") = passes.toSeq
     passes.forall(_("ok") == true)
   }

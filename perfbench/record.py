@@ -37,13 +37,15 @@ def main():
     cp = run.build(root)
     data = os.path.join(run.BENCH, "data", a.sf)
     run_root = os.path.join(root, ".bench_run", f"record-{os.getpid()}")
-    os.makedirs(os.path.join(run_root, "tmp"))
+    work = os.path.join(run_root, "work")
+    tmp = os.path.join(work, "tmp")
+    os.makedirs(tmp)
     slots = ",".join(run.slot_arg(w) for w in batch)
     out = os.path.join(run_root, "result.json")
     try:
-        rc = run.run_jvm(run.java_cmd(cp, run.heap_size(), run_root, {
-            "mode": "record", "root": run_root, "cpus": run.cpu_count(),
-            "data": data, "slots": slots, "out": out}),
+        rc = run.run_jvm(run.java_cmd(cp, run.heap_size(), tmp, {
+            "mode": "record", "root": work, "own": run_root,
+            "cpus": run.cpu_count(), "data": data, "slots": slots, "out": out}),
             os.path.join(run_root, "jvm.log"), float("inf"))
         res = json.load(open(out))
         if rc != 0 or not res.get("ok"):

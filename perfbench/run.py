@@ -3,13 +3,17 @@
 
 Usage (from the root of a graft checkout):
 
-    python3 perfbench/run.py --workload telemetry --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload batch --seed 1 --seconds 5 --trace 0
 
 Builds graft and the harness from source with sbt (cached in .bench_build/
 by a hash of the sources), makes one temp root under .bench_run/, copies the
 workload's input tables into it, and runs the harness (perfbench/harness)
 in a fresh JVM on local[nproc] with a heap sized from /proc/meminfo.
 Set-up time is sampled in extra JVMs that only start a session.
+
+The temp root holds input/ (the input copy), own/ (the harness's logs,
+results and derived inputs) and work/ (the program's: index root, Spark
+scratch, checkpoints, sinks, java.io.tmpdir). disk_mb counts work/ only.
 
 The last stdout line is one JSON object: correct, attempted, failed and the
 metrics (end-to-end with --trace 0, per-layer with --trace 1). The full
@@ -107,8 +111,9 @@ def build(root):
                  "-Dsbt.server.autostart=false", f"-Djava.io.tmpdir={tmp}",
                  "compile",
                  "export Runtime/fullClasspath"],
-                cwd=BENCH, env=env, stdout=subprocess.PIPE, stderr=lf,
-                stdin=subprocess.DEVNULL, timeout=BUILD_TIMEOUT_S, text=True)
+                cwd=os.path.join(root, NAME), env=env, stdout=subprocess.PIPE,
+                stderr=lf, stdin=subprocess.DEVNULL, timeout=BUILD_TIMEOUT_S,
+                text=True)
         except subprocess.TimeoutExpired:
             raise BenchError("sbt build timed out")
         lf.write(r.stdout)
@@ -148,10 +153,21 @@ def load_avg():
     return os.getloadavg()[0]
 
 
-def java_cmd(cp, heap, run_root, args):
+def cpu_jiffies():
+    """(steal, total) from /proc/stat: on a shared VM, the time the host
+    gave this machine's CPUs to others, which slows every timed span."""
+    try:
+        with open("/proc/stat") as f:
+            xs = [int(x) for x in f.readline().split()[1:]]
+        return (xs[7] if len(xs) > 7 else 0), sum(xs)
+    except (OSError, ValueError):
+        return 0, 0
+
+
+def java_cmd(cp, heap, tmpdir, args):
     return (["java", f"-Xms{heap}", f"-Xmx{heap}",
              "-XX:ReservedCodeCacheSize=1g", "-XX:+UseCodeCacheFlushing",
-             f"-Djava.io.tmpdir={run_root}/tmp", "-Duser.timezone=UTC",
+             f"-Djava.io.tmpdir={tmpdir}", "-Duser.timezone=UTC",
              "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
             + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
             + ["-cp", cp, "graftbench.Harness"]
@@ -183,6 +199,22 @@ def dir_bytes(path):
     return sum(os.path.getsize(os.path.join(d, f))
                for d, _, fs in os.walk(path) for f in fs
                if not os.path.islink(os.path.join(d, f)))
+
+
+def program_mb(work):
+    """Bytes the program left under its work root. Each stream replay
+    writes fresh checkpoint and sink dirs under stream/p<n>; those count
+    as one median replay, so the figure does not grow with the number of
+    replays a run makes."""
+    stream = os.path.join(work, "stream")
+    reps = [dir_bytes(os.path.join(stream, d)) for d in os.listdir(stream)] \
+        if os.path.isdir(stream) else []
+    return (dir_bytes(work) - sum(reps) + median(reps)) / MB
+
+
+def steal_share(start):
+    steal, total = (b - a for a, b in zip(start, cpu_jiffies()))
+    return steal / total if total else 0.0
 
 
 def median(xs):
@@ -287,26 +319,22 @@ def stream_metrics(res):
                 if any(b["in_rows"] > 0 for b in bs)]
         return (max(ends) - r["start_ms"]) / 1e3 if ends else r["wall_s"]
 
-    def rate(r):
-        rates = []
-        for bs in r["queries"].values():
-            data = [b for b in bs if b["in_rows"] > 0]
-            if len(data) < 2:
-                continue
-            first_end = data[0]["start_ms"] + data[0]["dur"]["triggerExecution"]
-            n = sum(b["in_rows"] for b in data[1:])
-            rates.append(n / max(1e-3, (r["end_ms"] - first_end) / 1e3))
-        return min(rates) if rates else 0.0
-
+    # data batches only: each query also runs a no-data batch that
+    # evicts state, and pooling the two kinds would put the median on
+    # the boundary between them
     trig = [b["dur"].get("triggerExecution", 0) for r in warm
-            for b in batches(r)]
+            for b in batches(r) if b["in_rows"] > 0]
     t, q = tail(trig)
     e2e = {
         "cold_s": first_commit_s(cold),
         "warm_s": median([r["wall_s"] for r in warm]),
         "call_p50_ms": median(trig),
     }
-    extra = {"events_per_s": median([rate(r) for r in warm]),
+    # at the demo's rate each query drains in one micro-batch, so
+    # nothing would be left with the first batch excluded: the rate is
+    # over the whole warm replay, replay staging included
+    extra = {"events_per_s": median(
+                 [r["input_rows"] / r["wall_s"] for r in warm]),
              "batch_p50_ms": median(trig), "batch_tail_ms": t,
              "batch_tail_pct": q, "warm_batches": len(trig),
              "warm_replays": len(warm)}
@@ -325,7 +353,8 @@ def stream_layers(res):
     first = [bs[0] for bs in cold["queries"].values() if bs]
     last = [bs[-1] for r in warm[-1:] for bs in r["queries"].values() if bs]
     out = {
-        "sources.v2.latest_offset_ms": med("latestOffset"),
+        "sources.v2.latest_offset_ms": median(
+            [r["latest_offset_ms"] for r in warm]),
         "sources.v2.first_batch_source_s": max(
             (b["dur"].get("latestOffset", 0) + b["dur"].get("getBatch", 0)
              for b in first), default=0) / 1e3,
@@ -380,8 +409,6 @@ def main():
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--sf", help="input scale under perfbench/data "
                     "(default: the workload's own, see workloads.json)")
-    ap.add_argument("--expected", help="expected-results file "
-                    "(default perfbench/expected/<sf>.json)")
     a = ap.parse_args()
     t_start = time.time()
     root = os.getcwd()
@@ -394,7 +421,7 @@ def main():
         return 2
     deadline = time.time() + RUN_BUDGET_S
     data = os.path.join(BENCH, "data", a.sf)
-    expected = a.expected or os.path.join(BENCH, "expected", a.sf + ".json")
+    expected = os.path.join(BENCH, "expected", a.sf + ".json")
     for p in [data] + ([expected] if spec["kind"] == "batch" else []):
         if not os.path.exists(p):
             log(f"missing {p}")
@@ -405,39 +432,42 @@ def main():
     if os.path.exists(run_root) and os.listdir(run_root):
         log(f"temp root {run_root} is not empty")
         return 2
-    os.makedirs(os.path.join(run_root, "tmp"), exist_ok=True)
+    work, own = os.path.join(run_root, "work"), os.path.join(run_root, "own")
+    tmp = os.path.join(work, "tmp")
+    os.makedirs(tmp)
+    os.makedirs(own)
     cpus, heap, load0 = cpu_count(), heap_size(), load_avg()
-    jlog = os.path.join(run_root, "jvm.log")
+    jiffies0 = cpu_jiffies()
+    jlog = os.path.join(own, "jvm.log")
     try:
         setup = []
         for i in range(SPEC["setup_runs"] - 1):
-            o = os.path.join(run_root, f"setup{i}.json")
-            rc = run_jvm(java_cmd(cp, heap, run_root, {
-                "mode": "setup", "root": run_root, "cpus": cpus, "out": o}),
-                jlog, deadline)
+            o = os.path.join(own, f"setup{i}.json")
+            rc = run_jvm(java_cmd(cp, heap, tmp, {
+                "mode": "setup", "root": work, "own": own, "cpus": cpus,
+                "out": o}), jlog, deadline)
             if rc != 0:
                 raise BenchError(f"set-up JVM exited {rc}")
             setup.append(json.load(open(o))["setup_s"])
-        # the workload's own input copy: cold file stamps and a real
-        # byte count for disk_mb
+        # the workload's own input copy, so its file stamps are cold
         inp = os.path.join(run_root, "input")
         shutil.copytree(data, inp)
-        args = {"mode": spec["kind"], "root": run_root, "cpus": cpus,
+        args = {"mode": spec["kind"], "root": work, "own": own, "cpus": cpus,
                 "data": inp, "seed": a.seed, "seconds": a.seconds,
-                "trace": a.trace, "out": os.path.join(run_root, "result.json")}
+                "trace": a.trace, "out": os.path.join(own, "result.json")}
         if spec["kind"] == "batch":
             args.update(slots=slot_arg(spec), expected=expected)
         else:
             args.update(events_per_trigger=spec["events_per_trigger"],
                         dup_share=spec["dup_share"])
-        rc = run_jvm(java_cmd(cp, heap, run_root, args), jlog, deadline)
+        rc = run_jvm(java_cmd(cp, heap, tmp, args), jlog, deadline)
         if not os.path.exists(args["out"]):
             raise BenchError(f"harness exited {rc} without a result")
         res = json.load(open(args["out"]))
         setup.append(res["setup_s"])
-        # bytes the run left under its temp root, read after the JVM
-        # has exited and Spark has removed its own scratch files
-        disk_mb = dir_bytes(run_root) / MB
+        # read after the JVM has exited and Spark has removed its own
+        # scratch files
+        disk_mb = program_mb(work)
     except BenchError as e:
         log(str(e))
         if os.path.exists(jlog):
@@ -476,6 +506,7 @@ def main():
         "workload": a.workload, "seed": a.seed, "seconds": a.seconds,
         "trace": a.trace, "sf": a.sf, "cpus": cpus, "heap": heap,
         "load_avg_start": load0, "load_avg_end": load_avg(),
+        "steal_share": steal_share(jiffies0),
         "wall_s": time.time() - t_start, "setup_samples_s": setup,
         "end_to_end": e2e, "extra": extra,
         "failed_ratio": failed / max(1, attempted),

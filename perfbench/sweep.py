@@ -66,6 +66,7 @@ def main():
             "seconds": bench["run_seconds"],
             "cpus": runs[0]["cpus"], "heap": runs[0]["heap"],
             "load_avg_start": [r["load_avg_start"] for r in runs],
+            "steal_share": [round(r["steal_share"], 3) for r in runs],
             "run_wall_s": [round(r["wall_s"], 1) for r in runs],
             "correct": all(r["summary"]["correct"] for r in runs),
             "metrics": {m: {"median": statistics.median(v), "spread": spread(v),

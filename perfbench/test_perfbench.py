@@ -9,6 +9,7 @@ must trip the correctness gate, and a directory holding only the benchmark
 (no graft source) must fail fast without printing a result. Takes about
 five minutes on 4 cores.
 """
+import contextlib
 import json
 import os
 import shutil
@@ -22,9 +23,23 @@ ROOT = os.getcwd()
 SF = "sf0.001"
 
 
-def bench(*args, cwd=ROOT):
+@contextlib.contextmanager
+def scratch_copy():
+    """A temp dir holding a copy of the benchmark directory."""
+    os.makedirs(os.path.join(ROOT, ".bench_run"), exist_ok=True)
+    d = tempfile.mkdtemp(dir=os.path.join(ROOT, ".bench_run"))
+    try:
+        shutil.copytree(BENCH, os.path.join(d, os.path.basename(BENCH)),
+                        ignore=shutil.ignore_patterns("target", "__pycache__"))
+        yield d
+    finally:
+        shutil.rmtree(d)
+
+
+def bench(*args, cwd=ROOT, bench_dir=None):
+    bench_dir = bench_dir or os.path.join(cwd, os.path.basename(BENCH))
     r = subprocess.run(
-        [sys.executable, os.path.join(cwd, os.path.basename(BENCH), "run.py"),
+        [sys.executable, os.path.join(bench_dir, "run.py"),
          "--seconds", "1",
          "--sf", SF, *args],
         cwd=cwd, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
@@ -57,35 +72,31 @@ class BenchmarkTest(unittest.TestCase):
                             self.assertGreater(v["value"], 0, k)
 
     def test_wrong_expected_digest_trips_the_gate(self):
-        with open(os.path.join(BENCH, "expected", SF + ".json")) as f:
-            exp = json.load(f)
-        slot = next(k for k, v in sorted(exp.items()) if "digest" in v)
-        exp[slot]["digest"] = "0" * 64
-        out_dir = os.path.join(ROOT, ".bench_out")
-        os.makedirs(out_dir, exist_ok=True)
-        path = os.path.join(out_dir, "tampered-expected.json")
-        with open(path, "w") as f:
-            json.dump(exp, f)
-        rc, out, err = bench("--workload", "batch", "--seed", "1",
-                             "--trace", "0", "--expected", path)
+        # a copy of the benchmark with one digest tampered, run against
+        # this checkout's program
+        with scratch_copy() as d:
+            copy = os.path.join(d, os.path.basename(BENCH))
+            path = os.path.join(copy, "expected", SF + ".json")
+            with open(path) as f:
+                exp = json.load(f)
+            slot = next(k for k, v in sorted(exp.items()) if "digest" in v)
+            exp[slot]["digest"] = "0" * 64
+            with open(path, "w") as f:
+                json.dump(exp, f)
+            rc, out, err = bench("--workload", "batch", "--seed", "1",
+                                 "--trace", "0", bench_dir=copy)
         self.assertNotEqual(rc, 0)
         self.assertFalse(out["correct"])
         self.assertGreaterEqual(out["failed"], 1)
         self.assertIn(slot, err)
 
     def test_without_the_program_it_fails_fast(self):
-        os.makedirs(os.path.join(ROOT, ".bench_run"), exist_ok=True)
-        d = tempfile.mkdtemp(dir=os.path.join(ROOT, ".bench_run"))
-        try:
+        with scratch_copy() as d:
             shutil.copy(os.path.join(ROOT, "BENCHMARK.json"), d)
-            shutil.copytree(BENCH, os.path.join(d, os.path.basename(BENCH)),
-                            ignore=shutil.ignore_patterns("target"))
             rc, out, err = bench("--workload", "batch", "--seed", "1",
                                  "--trace", "0", cwd=d)
-            self.assertNotEqual(rc, 0)
-            self.assertIsNone(out)
-        finally:
-            shutil.rmtree(d)
+        self.assertNotEqual(rc, 0)
+        self.assertIsNone(out)
 
 
 if __name__ == "__main__":
