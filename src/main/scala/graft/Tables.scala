@@ -24,12 +24,9 @@ object Tables {
     * path's mtime (like the IVF quantizer cache) so a corpus
     * regenerated inside one JVM re-counts instead of serving a stale
     * size to the guards; superseded entries are evicted. */
-  private val countCache = scala.collection.concurrent.TrieMap.empty[(String, Long), Long]
-  def cachedCount(s: SparkSession, path: String): Long = {
-    val stamp = pathStamp(s, path)
-    countCache.filterInPlace { case ((p, st), _) => p != path || st == stamp }
-    countCache.getOrElseUpdate((path, stamp), s.read.parquet(path).count())
-  }
+  private val countCache = new StampedCache[Unit, Long]
+  def cachedCount(s: SparkSession, path: String): Long =
+    countCache(path, pathStamp(s, path), ())(s.read.parquet(path).count())
 
   /** Modification stamp of a data path through the Hadoop FileSystem
     * API — java.io.File.lastModified() is silently 0 for every
@@ -119,12 +116,10 @@ object Tables {
     * [[pathStamp]] so a rewritten corpus or index re-infers (the
     * countCache/metaCache rule). Same frame, same schema, same plan —
     * only the redundant footer/listing work is gone. */
-  private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), org.apache.spark.sql.types.StructType]
+  private val schemaCache =
+    new StampedCache[Unit, org.apache.spark.sql.types.StructType]
   def readParquet(s: SparkSession, path: String): DataFrame = {
-    val stamp = pathStamp(s, path)
-    schemaCache.filterInPlace { case ((p, st), _) => p != path || st == stamp }
-    val schema = schemaCache.getOrElseUpdate((path, stamp),
+    val schema = schemaCache(path, pathStamp(s, path), ())(
       s.read.parquet(path).schema)
     s.read.schema(schema).parquet(path)
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{StampedCache, Tables}
 
 /** Training-data curation pipeline: the composition the C/E suites
   * exist for. Stages (each independently testable, chained lazily so
@@ -790,11 +790,7 @@ object Curation {
   def pipelineCurateCertified(spark: SparkSession, sfDir: String,
       seqLen: Int = 2048, shards: Int = 8): DataFrame = {
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    certDirCache.filterInPlace { case ((d, st), dir) =>
-      val stale = d == sfDir && st != stamp
-      if (stale) Dedup.deleteAtExit(dir)
-      !stale }
-    val dir = certDirCache.getOrElseUpdate((sfDir, stamp), {
+    val dir = certDirCache(sfDir, stamp, ()) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-cert").toString
       writePackedShards(
@@ -802,13 +798,12 @@ object Curation {
           .select(col("doc_id"), col("clean_text").as("text")),
         d, seqLen, shards)
       d
-    })
+    }
     val m = shardManifest(spark, dir)
     verifyShards(spark, dir, m)
     m
   }
-  private val certDirCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), String]
+  private val certDirCache = new StampedCache[Unit, String](Dedup.deleteAtExit)
 
   // ------------------------------------------------------------- C8f
   /** STREAMING code-routed curation — C8e's ingest twin: the E41
@@ -1439,22 +1434,17 @@ object Curation {
     * just computed. */
   def shardManifestQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    shardDirCache.filterInPlace { case ((d, st), dir) =>
-      val stale = d == sfDir && st != stamp
-      if (stale) Dedup.deleteAtExit(dir)
-      !stale }
-    val dir = shardDirCache.getOrElseUpdate((sfDir, stamp), {
+    val dir = shardDirCache(sfDir, stamp, ()) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-shards").toString
       writePackedShards(Tables.documents(spark, sfDir), d)
       d
-    })
+    }
     val m = shardManifest(spark, dir)
     verifyShards(spark, dir, m)
     m
   }
-  private val shardDirCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), String]
+  private val shardDirCache = new StampedCache[Unit, String](Dedup.deleteAtExit)
 
   // ------------------------------------------------------------- C63
   /** DOC-AWARE packing — the variant C43's boundary-crosser count
@@ -2510,7 +2500,7 @@ object Curation {
     * per-call work. Superseded versions are evicted with their blocks
     * released. */
   private val trainMixStageCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), DataFrame]
+    new StampedCache[Unit, DataFrame](Tables.unpinCheckpoint)
 
   /** Clean-stage pins (gates + exact dedup + decontamination), keyed
     * like [[trainMixStageCache]] and SHARED by both training
@@ -2520,7 +2510,7 @@ object Curation {
     * blocks released on a stamp change): a second pipeline arriving
     * later must not re-run curation because the first one finished. */
   private val cleanStageCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), DataFrame]
+    new StampedCache[Unit, DataFrame](Tables.unpinCheckpoint)
 
   /** The shared curation front half: language/quality gates + exact
     * dedup over the train split, benchmark decontamination against
@@ -2537,10 +2527,7 @@ object Curation {
     * applies verbatim. */
   private def cleanStage(spark: SparkSession, sfDir: String): DataFrame = {
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    cleanStageCache.filterInPlace { case ((d, st), df) =>
-      d != sfDir || st == stamp || { Tables.unpinCheckpoint(df); false }
-    }
-    cleanStageCache.getOrElseUpdate((sfDir, stamp), {
+    cleanStageCache(sfDir, stamp, ()) {
       val docs = Tables.documents(spark, sfDir)
       val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
       val train = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
@@ -2554,19 +2541,15 @@ object Curation {
         .withColumn("n_tokens", size(TextAnalysis.tokens()).cast("long"))
         .select(col("doc_id"), col("source"), col("n_tokens"))
         .localCheckpoint(true)
-    })
+    }
   }
 
   def pipelineTrainMix(spark: SparkSession, sfDir: String,
       seqLen: Int = 2048): DataFrame = {
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    trainMixStageCache.filterInPlace { case ((d, st), df) =>
-      d != sfDir || st == stamp || { Tables.unpinCheckpoint(df); false }
-    }
-    val mixed = trainMixStageCache.getOrElseUpdate((sfDir, stamp), {
+    val mixed = trainMixStageCache(sfDir, stamp, ())(
       mixSampleFromCounts(cleanStage(spark, sfDir), "source",
-        Map("src1" -> 500L), defaultBudget = 800L).localCheckpoint(true)
-    })
+        Map("src1" -> 500L), defaultBudget = 800L).localCheckpoint(true))
     packFromCounts(mixed, seqLen, keep = Seq("source"))
   }
 
@@ -3095,16 +3078,13 @@ object Curation {
     * number of re-selections at different fractions) reuse it. Pinned
     * eagerly (3-column corpus-rows frame), evicted when a regenerated
     * corpus supersedes the stamp — the D6 quantizedCache discipline. */
-  private val dsirCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Seq[String], Int), DataFrame]
+  private val dsirCache =
+    new StampedCache[(Seq[String], Int), DataFrame](Tables.unpinCheckpoint)
 
   private def cachedDsirScored(spark: SparkSession, sfDir: String,
       targetSources: Seq[String], nBuckets: Int): DataFrame = {
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    dsirCache.filterInPlace { case ((d, st, _, _), df) =>
-      d != sfDir || st == stamp || { Tables.unpinCheckpoint(df); false }
-    }
-    dsirCache.getOrElseUpdate((sfDir, stamp, targetSources, nBuckets),
+    dsirCache(sfDir, stamp, (targetSources, nBuckets))(
       dsirScored(Tables.documents(spark, sfDir),
         col("source").isin(targetSources.map(x => x: Any): _*), nBuckets)
         .localCheckpoint(true))
@@ -5198,9 +5178,7 @@ object Curation {
     // memory only (7 rows), zero pinned blocks.
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
     val key = s"$nBuckets:${thresholds.mkString(",")}:$valFrac:$testFrac:$seed"
-    reportCache.filterInPlace { case ((d, st, _), _) =>
-      d != sfDir || st == stamp }
-    val (rows, schema) = reportCache.getOrElseUpdate((sfDir, stamp, key), {
+    val (rows, schema) = reportCache(sfDir, stamp, key) {
       val docs = Tables.documents(spark, sfDir)
       val rep = classifierReportOf(docs,
         gopherRules(docs).select(col("doc_id"), col("passed").as("is_pos")),
@@ -5208,14 +5186,13 @@ object Curation {
           .select(col("doc_id"), col("split")),
         nBuckets, thresholds)
       (rep.collectAsList(), rep.schema)
-    })
+    }
     spark.createDataFrame(rows, schema)
   }
 
-  private val reportCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, String),
-      (java.util.List[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType)]
+  private val reportCache = new StampedCache[String,
+    (java.util.List[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType)]
 
   /** C61 over arbitrary docs + truth labels (doc_id, is_pos) + a split
     * assignment (doc_id, split) — the spec entry (a hand-built
@@ -5412,10 +5389,7 @@ object Curation {
     // ≤ nBins collected rows, zero pinned blocks left behind
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
     val key = s"$nBuckets:$nBins:$valFrac:$testFrac:$seed"
-    calibrationCache.filterInPlace { case ((d, st, _), _) =>
-      d != sfDir || st == stamp }
-    val (rows, schema) = calibrationCache.getOrElseUpdate(
-        (sfDir, stamp, key), {
+    val (rows, schema) = calibrationCache(sfDir, stamp, key) {
       val docs = Tables.documents(spark, sfDir)
       val rep = classifierCalibrationOf(docs,
         gopherRules(docs).select(col("doc_id"), col("passed").as("is_pos")),
@@ -5423,14 +5397,13 @@ object Curation {
           .select(col("doc_id"), col("split")),
         nBuckets, nBins)
       (rep.collectAsList(), rep.schema)
-    })
+    }
     spark.createDataFrame(rows, schema)
   }
 
-  private val calibrationCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, String),
-      (java.util.List[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType)]
+  private val calibrationCache = new StampedCache[String,
+    (java.util.List[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType)]
 
   /** C69 over arbitrary docs + truth (doc_id, is_pos) + a split
     * assignment — the spec entry (a planted separable corpus puts all
@@ -5583,22 +5556,18 @@ object Curation {
     * silently floor every missing bucket at 0. */
   case class ClassifierBundle(model: Array[Double], threshold: Double,
       profile: DataFrame)
-  private val bundleCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), ClassifierBundle]
+  private val bundleCache = new StampedCache[Unit, ClassifierBundle]
   /** Parsed bundles cached per (dir, meta stamp) — the Dedup.indexMeta
     * rule: re-opening a frozen artifact is three driver jobs (meta
     * head + nBuckets-row weights collect + profile read) that a
     * serving session otherwise pays once per scored batch; a restaged
     * bundle gets a fresh stamp and a fresh parse. */
   def readQualityClassifier(spark: SparkSession,
-      dir: String): ClassifierBundle = {
+      dir: String): ClassifierBundle =
     // root stamp, not meta — a weights/profile rewrite alone must
     // invalidate the parsed bundle (the readLangModel rule)
-    val stamp = Tables.pathStamp(spark, dir)
-    bundleCache.filterInPlace { case ((d, st), _) => d != dir || st == stamp }
-    bundleCache.getOrElseUpdate((dir, stamp),
+    bundleCache(dir, Tables.pathStamp(spark, dir), ())(
       readQualityClassifierUncached(spark, dir))
-  }
   private def readQualityClassifierUncached(spark: SparkSession,
       dir: String): ClassifierBundle = {
     val m = spark.read.parquet(s"$dir/meta").head()
@@ -5625,24 +5594,18 @@ object Curation {
 
   /** Served entry: the gated serve ROUTED THROUGH THE DISK BUNDLE,
     * written once per corpus version (the C10 temp-dir discipline). */
-  private val bundleDirCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Int), String]
+  // stale corpus versions' staged dirs are reaped at JVM exit (the
+  // snapshotCache rule)
+  private val bundleDirCache = new StampedCache[Int, String](Dedup.deleteAtExit)
   private def servedBundleDir(spark: SparkSession, sfDir: String,
-      nBuckets: Int): String = {
-    val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    // stale corpus versions' staged dirs are reaped at JVM exit (the
-    // snapshotCache rule)
-    bundleDirCache.filterInPlace { case ((d, st, _), dir) =>
-      val stale = d == sfDir && st != stamp
-      if (stale) Dedup.deleteAtExit(dir)
-      !stale }
-    bundleDirCache.getOrElseUpdate((sfDir, stamp, nBuckets), {
+      nBuckets: Int): String =
+    bundleDirCache(sfDir, Tables.pathStamp(spark, s"$sfDir/documents.parquet"),
+        nBuckets) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-classifier").toString
       writeQualityClassifier(spark, sfDir, d, nBuckets)
       d
-    })
-  }
+    }
 
   def classifierServeIndexed(spark: SparkSession, sfDir: String,
       nBuckets: Int = 4096): DataFrame =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{StampedCache, Tables}
 import graft.functions.{TextFunctions, VectorFunctions}
 
 /** Deduplication suite for training-data pipelines (SURVEY.md §2.C):
@@ -337,7 +337,7 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/meta")
     // a rebuild may change the params — seed the per-JVM meta cache
     // under the just-written meta's stamp (saves the first probe's read)
-    metaCache.put((indexDir, Tables.pathStamp(spark, s"$indexDir/meta")),
+    metaCache(indexDir, Tables.pathStamp(spark, s"$indexDir/meta"), ())(
       (shingleSize, numHashes, bands))
     // a rebuild replaces the staged set wholesale — stale tombstones
     // surviving it would silently filter re-ingested ids forever.
@@ -357,16 +357,12 @@ object Dedup {
     * centroidCache pattern): an index REBUILT at the same path — by
     * this JVM or any other — gets a fresh stamp and a re-read instead
     * of stale params silently mis-shaping every later probe. */
-  private val metaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), (Int, Int, Int)]
-  private def indexMeta(spark: SparkSession, indexDir: String): (Int, Int, Int) = {
-    val stamp = Tables.pathStamp(spark, s"$indexDir/meta")
-    metaCache.filterInPlace { case ((d, st), _) => d != indexDir || st == stamp }
-    metaCache.getOrElseUpdate((indexDir, stamp), {
+  private val metaCache = new StampedCache[Unit, (Int, Int, Int)]
+  private def indexMeta(spark: SparkSession, indexDir: String): (Int, Int, Int) =
+    metaCache(indexDir, Tables.pathStamp(spark, s"$indexDir/meta"), ()) {
       val meta = spark.read.parquet(s"$indexDir/meta").head()
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    })
-  }
+    }
 
   /** Fresh-batch frames pinned (eager localCheckpoint) by the indexed
     * sweeps, tracked so a long-lived driver can free their blocks
@@ -670,7 +666,7 @@ object Dedup {
     Seq((shingleSize, numHashes, bands))
       .toDF("shingle_size", "num_hashes", "bands")
       .coalesce(1).write.mode("overwrite").parquet(s"$dstDir/meta")
-    metaCache.put((dstDir, Tables.pathStamp(spark, s"$dstDir/meta")),
+    metaCache(dstDir, Tables.pathStamp(spark, s"$dstDir/meta"), ())(
       (shingleSize, numHashes, bands))
   }
 
@@ -700,9 +696,13 @@ object Dedup {
 
   /** LSH index dirs keyed by (corpus dir, mtime) — like the IVF
     * quantizer cache: the index build is INDEX BUILD work (once per
-    * corpus version), not per-sweep work. */
-  private val lshIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    * corpus version), not per-sweep work. Superseded versions' dirs
+    * are deleted at JVM EXIT, not on eviction: a DataFrame returned
+    * before the corpus regeneration may still lazily scan the old
+    * index — immediate deletion would fail that plan mid-scan with
+    * FileNotFoundException. Disk growth is bounded by regenerations
+    * within one JVM (a test/bench handful). */
+  private val lshIndexCache = new StampedCache[Unit, String](deleteAtExit)
 
   /** Driver query (rows-only): the weekly-sweep shape. 90% of the
     * corpus (doc_id % 10 != 0) is staged as the index; the other 10%
@@ -711,22 +711,11 @@ object Dedup {
   def dedupMinhashIndexed(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    val indexDir = lshIndexCache.getOrElseUpdate((sfDir, stamp), {
+    val indexDir = lshIndexCache(sfDir, stamp, ()) {
       val dir = java.nio.file.Files.createTempDirectory("graft-lsh-index").toString
       writeLshIndex(docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), "doc_id", "text", dir)
-      // evict cache entries of superseded corpus versions (same dir,
-      // older mtime). Their files are deleted at JVM EXIT, not here: a
-      // DataFrame returned before the corpus regeneration may still
-      // lazily scan the old index — immediate deletion would fail that
-      // plan mid-scan with FileNotFoundException. Disk growth is
-      // bounded by regenerations within one JVM (a test/bench handful).
-      lshIndexCache.filterInPlace { case ((d, s), old) =>
-        val stale = d == sfDir && s != stamp
-        if (stale) deleteAtExit(old)
-        !stale
-      }
       dir
-    })
+    }
     minhashPairsIndexed(spark, indexDir,
       docs.filter(pmod(col("doc_id"), lit(10)) === 0), "doc_id", "text")
   }
@@ -836,14 +825,10 @@ object Dedup {
   /** Chunk layout of a staged SimHash index, (dir, meta-mtime)-keyed
     * like [[metaCache]] — the same per-sweep-eager-job-to-lookup trade,
     * and the same stale-rebuild protection. */
-  private val simhashMetaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Int]
-  private def simhashIndexChunks(spark: SparkSession, indexDir: String): Int = {
-    val stamp = Tables.pathStamp(spark, s"$indexDir/meta")
-    simhashMetaCache.filterInPlace { case ((d, st), _) => d != indexDir || st == stamp }
-    simhashMetaCache.getOrElseUpdate((indexDir, stamp),
+  private val simhashMetaCache = new StampedCache[Unit, Int]
+  private def simhashIndexChunks(spark: SparkSession, indexDir: String): Int =
+    simhashMetaCache(indexDir, Tables.pathStamp(spark, s"$indexDir/meta"), ())(
       spark.read.parquet(s"$indexDir/meta").head().getInt(0))
-  }
 
   def simhashPairsIndexed(spark: SparkSession, indexDir: String,
       newDocs: DataFrame, idCol: String, textCol: String,
@@ -927,13 +912,12 @@ object Dedup {
       .parquet(s"$dstDir/sigs")
     Seq(chunks).toDF("chunks")
       .coalesce(1).write.mode("overwrite").parquet(s"$dstDir/meta")
-    simhashMetaCache.put((dstDir, Tables.pathStamp(spark, s"$dstDir/meta")), chunks)
+    simhashMetaCache(dstDir, Tables.pathStamp(spark, s"$dstDir/meta"), ())(chunks)
   }
 
   /** SimHash index dirs keyed by (corpus dir, mtime), mirroring
-    * [[lshIndexCache]]. */
-  private val simhashIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), String]
+    * [[lshIndexCache]] (eviction and exit-time reaping included). */
+  private val simhashIndexCache = new StampedCache[Unit, String](deleteAtExit)
 
   /** Driver query (rows-only): the weekly-sweep shape over the staged
     * SimHash index — 90% of the corpus staged, the 10% batch signed and
@@ -941,19 +925,12 @@ object Dedup {
   def dedupSimhashIndexed(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    val indexDir = simhashIndexCache.getOrElseUpdate((sfDir, stamp), {
+    val indexDir = simhashIndexCache(sfDir, stamp, ()) {
       val dir = java.nio.file.Files.createTempDirectory("graft-simhash-index").toString
       writeSimhashIndex(docs.filter(pmod(col("doc_id"), lit(10)) =!= 0),
         "doc_id", "text", dir)
-      // superseded-version eviction + exit-time reaping as in
-      // dedupMinhashIndexed (see that cache's rationale)
-      simhashIndexCache.filterInPlace { case ((d, s), old) =>
-        val stale = d == sfDir && s != stamp
-        if (stale) deleteAtExit(old)
-        !stale
-      }
       dir
-    })
+    }
     simhashPairsIndexed(spark, indexDir,
       docs.filter(pmod(col("doc_id"), lit(10)) === 0), "doc_id", "text")
   }
@@ -1520,8 +1497,8 @@ object Dedup {
   /** A deterministic audit is AUDIT-BUILD work (the D8 recall-report
     * rule): the rows cache per (corpus dir, version stamp, threshold)
     * for the JVM's life, stale corpus versions evicted on access. */
-  private val recallReportCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Double), Seq[(String, Long, Long, Long, java.lang.Double)]]
+  private val recallReportCache =
+    new StampedCache[Double, Seq[(String, Long, Long, Long, java.lang.Double)]]
 
   def dedupRecallReport(spark: SparkSession, sfDir: String,
       threshold: Double = 0.5): DataFrame = {
@@ -1532,10 +1509,7 @@ object Dedup {
       s"exact dedup baseline would score n²=$n² pairs — audit-scale " +
         "only; at corpus scale the planted-recall specs are the check")
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    recallReportCache.filterInPlace { case ((d, st, _), _) =>
-      d != sfDir || st == stamp
-    }
-    recallReportCache.getOrElseUpdate((sfDir, stamp, threshold),
+    recallReportCache(sfDir, stamp, threshold)(
         dedupRecallReportOf(Tables.documents(spark, sfDir), threshold)
           .collect().toSeq.map(r => (r.getString(0), r.getLong(1),
             r.getLong(2), r.getLong(3),
@@ -1566,12 +1540,8 @@ object Dedup {
     import spark.implicits._
     require(frac > 0 && frac <= 1, s"frac $frac out of (0, 1]")
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    val key = s"$frac:$seed:$threshold"
-    sampledRecallCache.filterInPlace { case ((d, st, _), _) =>
-      d != sfDir || st == stamp
-    }
     val cut = math.floor(frac * 4294967296.0).toLong
-    sampledRecallCache.getOrElseUpdate((sfDir, stamp, key), {
+    sampledRecallCache(sfDir, stamp, s"$frac:$seed:$threshold") {
         val sampled = Tables.documents(spark, sfDir)
           .filter(shiftrightunsigned(
             Curation.shuffleKey($"doc_id", seed), 32) < cut)
@@ -1588,13 +1558,12 @@ object Dedup {
             r.getLong(2), r.getLong(3),
             if (r.isNullAt(4)) null
             else java.lang.Double.valueOf(r.getDouble(4))))
-      })
+      }
       .toDF("method", "found_pairs", "baseline_pairs", "matched", "recall")
   }
 
-  private val sampledRecallCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, String),
-      Seq[(String, Long, Long, Long, java.lang.Double)]]
+  private val sampledRecallCache =
+    new StampedCache[String, Seq[(String, Long, Long, Long, java.lang.Double)]]
 
   /** C54 over an arbitrary (doc_id, text) frame — the spec entry;
     * UNGUARDED (the driver wrapper owns the pair-ceiling check). */

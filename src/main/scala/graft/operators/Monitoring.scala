@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{StampedCache, Tables}
 
 /** Telemetry / monitoring operators (SURVEY.md §2.A) — the Spark-native
   * re-expression of the reference's analytics surface:
@@ -1871,25 +1871,21 @@ object Monitoring {
     * only (all-error device-hours, rare by construction) — never
     * corpus-sized; stale corpus versions are evicted and unpinned
     * exactly as [[Similarity]]'s exactBaselineCache. */
-  private val alarmVerdictCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Double, Int), (DataFrame, Long)]
+  private val alarmVerdictCache = new StampedCache[(Double, Int),
+    (DataFrame, Long)](v => Tables.unpinCheckpoint(v._1))
 
   private def cachedAlarmVerdicts(spark: SparkSession, sfDir: String,
       trainFrac: Double, nBuckets: Int): DataFrame = {
     val stamp = Tables.pathStamp(spark, s"$sfDir/events.parquet")
-    alarmVerdictCache.filterInPlace { case ((d, st, _, _), (df, _)) =>
-      d != sfDir || st == stamp || { Tables.unpinCheckpoint(df); false }
-    }
-    alarmVerdictCache.getOrElseUpdate(
-      (sfDir, stamp, trainFrac, nBuckets), {
-        // serve from the CACHED model — the bundle writer and every
-        // curve/report sibling share ONE train per (corpus, params)
-        val docs = alarmWindowsOf(Tables.events(spark, sfDir))
-        val v = alarmVerdictsFrom(docs,
-            cachedAlarmModel(spark, sfDir, trainFrac, nBuckets))
-          .localCheckpoint(true)
-        (v, v.count()) // alarm-hour-bounded — a driver-cheap count
-      })._1
+    alarmVerdictCache(sfDir, stamp, (trainFrac, nBuckets)) {
+      // serve from the CACHED model — the bundle writer and every
+      // curve/report sibling share ONE train per (corpus, params)
+      val docs = alarmWindowsOf(Tables.events(spark, sfDir))
+      val v = alarmVerdictsFrom(docs,
+          cachedAlarmModel(spark, sfDir, trainFrac, nBuckets))
+        .localCheckpoint(true)
+      (v, v.count()) // alarm-hour-bounded — a driver-cheap count
+    }._1
   }
 
   /** The TRAINED MODEL per corpus version — the same audit-artifact
@@ -1899,21 +1895,16 @@ object Monitoring {
     * TWICE (once directly, once through the curve's verdicts). Train
     * runs once per (corpus stamp, trainFrac, nBuckets) per JVM; the
     * verdict cache and the bundle writer both read it. */
-  private val alarmModelCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Double, Int),
-      Option[(Array[Double], Double, Double)]]
+  private val alarmModelCache =
+    new StampedCache[(Double, Int), Option[(Array[Double], Double, Double)]]
 
   private def cachedAlarmModel(spark: SparkSession, sfDir: String,
       trainFrac: Double, nBuckets: Int)
-      : Option[(Array[Double], Double, Double)] = {
-    val stamp = Tables.pathStamp(spark, s"$sfDir/events.parquet")
-    alarmModelCache.filterInPlace { case ((d, st, _, _), _) =>
-      d != sfDir || st == stamp
-    }
-    alarmModelCache.getOrElseUpdate((sfDir, stamp, trainFrac, nBuckets),
+      : Option[(Array[Double], Double, Double)] =
+    alarmModelCache(sfDir, Tables.pathStamp(spark, s"$sfDir/events.parquet"),
+        (trainFrac, nBuckets))(
       alarmModelOf(alarmWindowsOf(Tables.events(spark, sfDir)),
         trainFrac, nBuckets))
-  }
 
   /** The labeled alarm-window frame A69 trains and serves on —
     * (doc_id, user_id, hour_us, text, was_real) — exposed as a seam so
@@ -2236,20 +2227,15 @@ object Monitoring {
   /** The re-opened bundle: (model, derived threshold). A torn weights
     * table fails by name (the C60d rule — a partial vector would
     * silently floor missing buckets at 0). */
-  private val alarmBundleCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), (Array[Double], Double)]
+  private val alarmBundleCache = new StampedCache[Unit, (Array[Double], Double)]
   /** Parsed bundles cached per (dir, meta stamp) — the C60d
     * bundleCache rule applied to the alarm verifier. */
   def readAlarmVerifier(spark: SparkSession,
-      dir: String): (Array[Double], Double) = {
+      dir: String): (Array[Double], Double) =
     // root stamp, not meta — a weights rewrite alone must invalidate
     // the parsed bundle (the readLangModel rule)
-    val stamp = graft.Tables.pathStamp(spark, dir)
-    alarmBundleCache.filterInPlace { case ((d, st), _) =>
-      d != dir || st == stamp }
-    alarmBundleCache.getOrElseUpdate((dir, stamp),
+    alarmBundleCache(dir, graft.Tables.pathStamp(spark, dir), ())(
       readAlarmVerifierUncached(spark, dir))
-  }
   private def readAlarmVerifierUncached(spark: SparkSession,
       dir: String): (Array[Double], Double) = {
     val m = spark.read.parquet(s"$dir/meta").head()

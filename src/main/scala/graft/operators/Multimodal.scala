@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{StampedCache, Tables}
 
 /** One sampled frame emitted by the frame-sampling pipeline. */
 case class SampledFrame(
@@ -1062,18 +1062,14 @@ object Multimodal {
     * against the brute entry rather than equality — the D25b
     * discipline. Rows-only (probe geometry — D25b's reason). */
   private val FrameIdxSpan = 1L << 20
-  private val frameIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), String]
+  // stale corpus versions' staged dirs are reaped at JVM exit (a
+  // returned lazy plan may still scan them — the snapshotCache rule)
+  private val frameIndexCache =
+    new StampedCache[Unit, String](Dedup.deleteAtExit)
   private def frameIndexDir(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    // stale corpus versions' staged dirs are reaped at JVM exit (a
-    // returned lazy plan may still scan them — the snapshotCache rule)
-    frameIndexCache.filterInPlace { case ((d, st), dir) =>
-      val stale = d == sfDir && st != stamp
-      if (stale) Dedup.deleteAtExit(dir)
-      !stale }
-    frameIndexCache.getOrElseUpdate((sfDir, stamp), {
+    frameIndexCache(sfDir, stamp, ()) {
       val media = Tables.documents(spark, sfDir)
         .select($"doc_id", $"text".cast("binary"))
         .as[(Long, Array[Byte])]
@@ -1089,7 +1085,7 @@ object Multimodal {
         .createTempDirectory("graft-frame-index").toString
       Similarity.writeIvfIndexOf(vecs, dir, nCells)
       dir
-    })
+    }
   }
 
   def mmFrameSearchIvf(spark: SparkSession, sfDir: String, k: Int = 3,
@@ -2473,23 +2469,19 @@ object Multimodal {
   def mmPackCertified(spark: SparkSession, sfDir: String,
       seqLen: Int = 8192, shards: Int = 8): DataFrame = {
     val stamp = graft.Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    mmShardDirCache.filterInPlace { case ((d, st), dir) =>
-      val stale = d == sfDir && st != stamp
-      if (stale) Dedup.deleteAtExit(dir)
-      !stale }
-    val dir = mmShardDirCache.getOrElseUpdate((sfDir, stamp), {
+    val dir = mmShardDirCache(sfDir, stamp, ()) {
       val d = java.nio.file.Files
         .createTempDirectory("graft-mmshards").toString
       writeMmPackedShards(Tables.documents(spark, sfDir), d, seqLen,
         shards = shards)
       d
-    })
+    }
     val m = Curation.shardManifest(spark, dir)
     Curation.verifyShards(spark, dir, m)
     m
   }
-  private[graft] val mmShardDirCache = scala.collection.concurrent
-    .TrieMap.empty[(String, Long), String]
+  private[graft] val mmShardDirCache =
+    new StampedCache[Unit, String](Dedup.deleteAtExit)
 
   // ---------------------------------------------------------------- F28
   /** MEDIA DATA CARD — C68's datasheet discipline for the F family:

@@ -525,11 +525,6 @@ object Scale {
       .join(small, Seq(key))
   }
 
-  /** Deterministic fingerprint of a DataFrame's content (order-free,
-    * multiplicity-sensitive): decimal sum of per-row xxhash64 over all
-    * columns. The cheap way to assert two hundred-terabyte pipelines
-    * produced identical results without collecting either. (Not xor —
-    * xor cancels rows with even multiplicity.) */
   /** OPTIMIZER BARRIER — this frame's projections evaluate exactly
     * ONCE per row, no matter how many downstream expressions and
     * pushed predicates consume them. Catalyst's predicate pushdown and
@@ -548,8 +543,8 @@ object Scale {
     * than the rows it would have pruned.
     *
     * MECHANISM CHOICE, measured (r16): the zero-conversion alternative
-    * — [[graft.plans.Fence]], a custom pass-through plan node that
-    * blocks the same rules without the RDD round-trip's two per-row
+    * — the Fence, a custom pass-through plan node that blocks the
+    * same rules without the RDD round-trip's two per-row
     * conversions — LOST the A/B on the curate family at sf0.1: warm
     * medians (fence vs this) crawl 2.95/2.34, crawl_robust 3.72/2.88,
     * full 2.23/1.85, gated 2.07/1.87, predicted 1.60/1.44, v2
@@ -558,9 +553,9 @@ object Scale {
     * barrier's halves compile separately). The conversions this
     * mechanism pays are evidently cheaper than what the unified plan
     * costs in stats-driven re-planning and compile mass, so the RDD
-    * round-trip STAYS. The fence remains in plans/Fence.scala with a
-    * PlanSpec proof of its blocking behavior, for plans where the
-    * trade could run the other way (very wide rows, cheap plans). */
+    * round-trip STAYS. The fence had no production caller and was
+    * deleted; its last version (with its PlanSpec proof) is
+    * plans/Fence.scala at commit 095388e. */
   def evalOnce(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)
 
@@ -655,6 +650,11 @@ object Scale {
   def evalOnceStream(df: DataFrame): DataFrame =
     df.mapPartitions(it => it)(org.apache.spark.sql.Encoders.row(df.schema))
 
+  /** Deterministic fingerprint of a DataFrame's content (order-free,
+    * multiplicity-sensitive): decimal sum of per-row xxhash64 over all
+    * columns. The cheap way to assert two hundred-terabyte pipelines
+    * produced identical results without collecting either. (Not xor —
+    * xor cancels rows with even multiplicity.) */
   def contentFingerprint(df: DataFrame): String = {
     val cols = df.columns.map(col)
     df.select(xxhash64(cols: _*).cast("decimal(38,0)").as("h"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{StampedCache, Tables}
 import graft.functions.TextFunctions
 
 /** Text analysis for training-data pipelines (SURVEY.md §2.E): token
@@ -440,17 +440,13 @@ object TextAnalysis {
     * meta file's stamp, so a rebuilt artifact at the same path gets a
     * fresh parse, and the artifact on disk stays the source of truth
     * (nothing is served that wasn't read from it). */
-  private val langModelCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), LangModel]
-  def readLangModel(spark: SparkSession, dir: String): LangModel = {
+  private val langModelCache = new StampedCache[Unit, LangModel]
+  def readLangModel(spark: SparkSession, dir: String): LangModel =
     // stamp the artifact ROOT (folds every member table's subdir
     // mtime), not just meta: a rewrite of weights/priors alone — e.g.
     // a torn-artifact scenario — must invalidate the parsed model too
-    val stamp = graft.Tables.pathStamp(spark, dir)
-    langModelCache.filterInPlace { case ((d, st), _) => d != dir || st == stamp }
-    langModelCache.getOrElseUpdate((dir, stamp),
+    langModelCache(dir, graft.Tables.pathStamp(spark, dir), ())(
       readLangModelUncached(spark, dir))
-  }
   private def readLangModelUncached(spark: SparkSession,
       dir: String): LangModel = {
     val nB = spark.read.parquet(s"$dir/meta").head().getInt(0)
@@ -495,13 +491,7 @@ object TextAnalysis {
       testFrac: Double = 0.05, seed: Long = 11L): LangModel = {
     import spark.implicits._
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    // stale corpus versions' staged dirs are reaped at JVM exit (a
-    // returned lazy plan may still scan them — the snapshotCache rule)
-    langModelDirCache.filterInPlace { case ((d, st, _), dir) =>
-      val stale = d == sfDir && st != stamp
-      if (stale) Dedup.deleteAtExit(dir)
-      !stale }
-    val dir = langModelDirCache.getOrElseUpdate((sfDir, stamp, nBuckets), {
+    val dir = langModelDirCache(sfDir, stamp, nBuckets) {
       val docs = Tables.documents(spark, sfDir)
       val split = Curation.splitAssign(docs, valFrac, testFrac, seed)
         .select($"doc_id", $"split")
@@ -513,11 +503,13 @@ object TextAnalysis {
         .createTempDirectory("graft-langmodel").toString
       writeLangModel(spark, model, d, stamp)
       d
-    })
+    }
     readLangModel(spark, dir)
   }
-  private val langModelDirCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Int), String]
+  // stale corpus versions' staged dirs are reaped at JVM exit (a
+  // returned lazy plan may still scan them — the snapshotCache rule)
+  private val langModelDirCache =
+    new StampedCache[Int, String](Dedup.deleteAtExit)
 
   // ---------------------------------------------------------------- E35d
   /** TRAINED-vs-HEURISTIC LEDGER, per corpus language — the upgrade
@@ -2544,16 +2536,14 @@ object TextAnalysis {
     (merges.toSeq, vocab)
   }
 
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Int), (Seq[(String, String, Long)], DataFrame)]
+  private val bpeCache =
+    new StampedCache[Int, (Seq[(String, String, Long)], DataFrame)]
 
   private def cachedBpe(spark: SparkSession, sfDir: String,
-      nMerges: Int): (Seq[(String, String, Long)], DataFrame) = {
-    val stamp = graft.Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    bpeCache.filterInPlace { case ((d, st, _), _) => d != sfDir || st == stamp }
-    bpeCache.getOrElseUpdate((sfDir, stamp, nMerges),
+      nMerges: Int): (Seq[(String, String, Long)], DataFrame) =
+    bpeCache(sfDir,
+      graft.Tables.pathStamp(spark, s"$sfDir/documents.parquet"), nMerges)(
       bpeLearnOf(Tables.documents(spark, sfDir), nMerges))
-  }
 
   // ---------------------------------------------------------------- E27
   /** BPE APPLY — segment the corpus with the learned tokenizer and
@@ -2891,20 +2881,16 @@ object TextAnalysis {
       .orderBy($"rank")
   }
 
-  private val unigramCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Int, Int, Int, Int), Map[String, Double]]
+  private val unigramCache =
+    new StampedCache[(Int, Int, Int, Int), Map[String, Double]]
 
   private def cachedUnigram(spark: SparkSession, sfDir: String,
       vocabSize: Int, maxPieceLen: Int, seedSize: Int,
-      emRounds: Int): Map[String, Double] = {
-    val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    unigramCache.filterInPlace { case ((d, st, _, _, _, _), _) =>
-      d != sfDir || st == stamp }
-    unigramCache.getOrElseUpdate(
-      (sfDir, stamp, vocabSize, maxPieceLen, seedSize, emRounds),
+      emRounds: Int): Map[String, Double] =
+    unigramCache(sfDir, Tables.pathStamp(spark, s"$sfDir/documents.parquet"),
+        (vocabSize, maxPieceLen, seedSize, emRounds))(
       unigramLearnOf(Tables.documents(spark, sfDir), vocabSize,
         maxPieceLen, seedSize, emRounds))
-  }
 
   /** Viterbi segmentation under a piece log-prob table: best(i) =
     * max over pieces ending at i. Ties break to the LONGEST last
@@ -3160,17 +3146,13 @@ object TextAnalysis {
     * driver job per (dir, meta stamp) per JVM instead of one per apply
     * — the Dedup.indexMeta rule (a restaged artifact gets a fresh
     * stamp and a re-read). */
-  private val tokMetaCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), (String, String, Int)]
+  private val tokMetaCache = new StampedCache[Unit, (String, String, Int)]
   private def tokenizerMetaRow(spark: SparkSession,
-      tokDir: String): (String, String, Int) = {
-    val stamp = graft.Tables.pathStamp(spark, s"$tokDir/meta")
-    tokMetaCache.filterInPlace { case ((d, st), _) => d != tokDir || st == stamp }
-    tokMetaCache.getOrElseUpdate((tokDir, stamp), {
+      tokDir: String): (String, String, Int) =
+    tokMetaCache(tokDir, graft.Tables.pathStamp(spark, s"$tokDir/meta"), ()) {
       val m = spark.read.parquet(s"$tokDir/meta").head()
       (m.getString(0), m.getString(2), m.getInt(3))
-    })
-  }
+    }
 
   /** E27's apply fed from a staged artifact instead of the session
     * cache — the cross-session consumer: any corpus, any session,
@@ -3191,38 +3173,29 @@ object TextAnalysis {
     // rule; the table is ≤ vocabSize rows but the collect is a per-
     // apply driver job otherwise
     val stamp = graft.Tables.pathStamp(spark, s"$tokDir/pieces")
-    unigramVocabCache.filterInPlace { case ((d, st), _) =>
-      d != tokDir || st == stamp }
-    val logp = unigramVocabCache.getOrElseUpdate((tokDir, stamp),
+    val logp = unigramVocabCache(tokDir, stamp, ())(
       spark.read.parquet(s"$tokDir/pieces")
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
     unigramApplyOf(docs, logp, maxPieceLen)
   }
-  private val unigramVocabCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Map[String, Double]]
+  private val unigramVocabCache = new StampedCache[Unit, Map[String, Double]]
 
   /** Served entries: the apply ROUTED THROUGH THE DISK ARTIFACT —
     * write once per corpus version (the C10 temp-dir discipline),
     * then every apply re-opens the staged tokenizer; proves in
     * product that the artifact carries everything apply needs. */
-  private val tokDirCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, String), String]
+  // stale corpus versions' staged dirs are reaped at JVM exit (the
+  // snapshotCache rule)
+  private val tokDirCache = new StampedCache[String, String](Dedup.deleteAtExit)
   private def servedTokDir(spark: SparkSession, sfDir: String,
-      key: String)(write: String => Unit): String = {
-    val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")
-    // stale corpus versions' staged dirs are reaped at JVM exit (the
-    // snapshotCache rule)
-    tokDirCache.filterInPlace { case ((d, st, _), dir) =>
-      val stale = d == sfDir && st != stamp
-      if (stale) Dedup.deleteAtExit(dir)
-      !stale }
-    tokDirCache.getOrElseUpdate((sfDir, stamp, key), {
+      key: String)(write: String => Unit): String =
+    tokDirCache(sfDir, Tables.pathStamp(spark, s"$sfDir/documents.parquet"),
+        key) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-tokenizer").toString
       write(dir)
       dir
-    })
-  }
+    }
 
   def bpeApplyIndexed(spark: SparkSession, sfDir: String,
       nMerges: Int = 30): DataFrame = {

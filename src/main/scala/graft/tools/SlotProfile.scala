@@ -74,21 +74,21 @@ object SlotProfile {
         df.count()
         val t3 = System.nanoTime()
         // warm re-runs rebuild the frame like the bench does
-        val d2 = fn(spark, sfDir); val t4 = System.nanoTime()
-        d2.count(); val t5 = System.nanoTime()
+        fn(spark, sfDir).count(); val t5 = System.nanoTime()
         // job/stage/task count of the LAST warm run only — the
         // bench-shaped steady state (cold construction above may
         // include one-time cached-artifact builds). Listener events
         // deliver asynchronously (the r16 advice item): settle the bus
         // before resetting and after the run so stragglers from the
         // previous run don't land in this one's counters.
+        // exec3 starts AFTER the settle sleep: construct + count only
         Thread.sleep(300)
         jobs = 0; stages = 0; tasks = 0
-        val d3 = fn(spark, sfDir); val t6 = System.nanoTime()
-        d3.count(); val t7 = System.nanoTime()
+        val t6 = System.nanoTime()
+        fn(spark, sfDir).count(); val t7 = System.nanoTime()
         Thread.sleep(300)
         def s(a: Long, b: Long) = (b - a) / 1e9
-        println(f"$name%-32s ${s(t0, t1)}%7.3f ${s(t1, t2)}%7.3f ${s(t2, t3)}%7.3f ${s(t4, t5) + s(t3, t4)}%7.3f ${s(t6, t7) + s(t5, t6)}%7.3f $jobs%5d $stages%5d $tasks%6d")
+        println(f"$name%-32s ${s(t0, t1)}%7.3f ${s(t1, t2)}%7.3f ${s(t2, t3)}%7.3f ${s(t3, t5)}%7.3f ${s(t6, t7)}%7.3f $jobs%5d $stages%5d $tasks%6d")
       } catch { case e: Throwable =>
         println(f"$name%-32s FAILED: ${e.getMessage}")
       }

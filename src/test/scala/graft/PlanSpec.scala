@@ -642,41 +642,4 @@ class PlanSpec extends SparkSpec {
       .linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
     assert(exLines.nonEmpty, "expected the cell-mean window exchange")
   }
-
-  test("fence: blocks pushdown and collapse at zero conversion, result-identical") {
-    import org.apache.spark.sql.functions._
-    import graft.plans.Fence
-    // the DupGateSpec probe shape: a heavy column consumed by several
-    // pushed-down predicates — unfenced, pushdown inlines the
-    // tokenizer into each conjunct
-    def probe(barrier: DataFrame => DataFrame): DataFrame =
-      barrier(spark.read.parquet(s"$sf/documents.parquet")
-        .withColumn("toks", TextAnalysis.tokens("text")))
-        .withColumn("n", size(col("toks")))
-        .withColumn("u", size(array_distinct(col("toks"))))
-        .withColumn("f", element_at(col("toks"), 1))
-        .withColumn("l", element_at(col("toks"), -1))
-        .drop("toks")
-        .filter(col("n") >= 3).filter(col("u") >= 2)
-        .select(col("doc_id"), col("n"), col("u"), col("f"), col("l"))
-    val unfenced = executedPlan(probe(identity))
-    val fenced = probe(Fence(_))
-    val fp = executedPlan(fenced)
-    def tok(p: String) =
-      graft.tools.DupAudit.markerCounts(p).toMap.getOrElse("tokenize", 0)
-    assert(tok(unfenced) >= 4, s"probe lost its pathology: $unfenced")
-    assert(tok(fp) <= 1, s"fence failed to stop the cloning:\n$fp")
-    // the fence is a pure plan barrier: no row conversion, no RDD leaf
-    assert(fp.contains("Fence"), fp)
-    assert(!fp.contains("ExistingRDD") && !fp.contains("Scan ExistingRDD"),
-      s"fence fell back to an RDD round-trip:\n$fp")
-    // and no filter crossed it down to the parquet scan
-    assert(!fp.linesIterator.exists(l =>
-      l.contains("PushedFilters") && l.contains("n")
-        && l.contains("GreaterThanOrEqual")), fp)
-    // results bit-identical with the unfenced plan
-    val a = probe(identity).collect().map(_.toString).sorted
-    val b = fenced.collect().map(_.toString).sorted
-    assert(a.sameElements(b), "fence changed the result")
-  }
 }
